@@ -1722,6 +1722,10 @@ def _ivfpq_encoder(bc_cn, bc_rc, bc_books):
     return encode
 
 
+# the rows the IVFPQ encode stage emits: one posting per vector
+IVFPQ_CODES_SCHEMA = "vid bigint, bucket int, codes array<int>"
+
+
 def ivfpq_encode(
     vectors: DataFrame,
     Cn: np.ndarray,
@@ -1748,7 +1752,7 @@ def ivfpq_encode(
     )
     return src.mapInPandas(
         _ivfpq_encoder(bc_cn, bc_rc, bc_books),
-        schema="vid bigint, bucket int, codes array<int>",
+        schema=IVFPQ_CODES_SCHEMA,
     )
 
 
@@ -1871,7 +1875,7 @@ def cosine_topk_ivfpq(
 
     codes = src.mapInPandas(
         _ivfpq_encoder(bc_cn, bc_rc, bc_books),
-        schema="vid bigint, bucket int, codes array<int>",
+        schema=IVFPQ_CODES_SCHEMA,
     )
 
     n_probe_ = min(int(n_probe), Cn.shape[0])

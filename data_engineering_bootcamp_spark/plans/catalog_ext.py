@@ -34,7 +34,7 @@ from ..operators.similarity import (
     neardup_embedding_cosine,
     semantic_dedup,
 )
-from ..sources.readers import load_table, normalize_ts
+from ..sources.readers import load_table, normalize_ts, parquet_schema
 from ..streaming.pipelines import sliding_counts, tumbling_counts
 
 JAN = "2024-01-01"
@@ -1000,7 +1000,7 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # has shipped both int64-nanos and MICROS-NTZ encodings, so the
     # conversion must branch, not assume (readers.normalize_ts).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # the file-stream source lists a DIRECTORY; the testdata table is a
     # single parquet file, so expose it through a temp-dir symlink
     import os
@@ -1111,7 +1111,7 @@ def _events_file_stream(spark: SparkSession, sf_dir: str):
     import tempfile
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     d = tempfile.mkdtemp(prefix="stream_gate_")
     os.symlink(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
     stream = normalize_ts(
@@ -1280,7 +1280,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.sinks import start_foreach_batch
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     d = tempfile.mkdtemp(prefix="stream_dedup_src_")
     os.symlink(f"{sf_dir}/events.parquet", f"{d}/events_a.parquet")
     os.symlink(f"{sf_dir}/events.parquet", f"{d}/events_b.parquet")
@@ -1642,7 +1642,7 @@ def q_streaming_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     ckpt = tempfile.mkdtemp(prefix="stream_adm_ckpt_")
     try:
         incoming.select("doc_id", "text").write.mode("overwrite").parquet(src)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         stream = spark.readStream.schema(schema).format("parquet").load(src)
         cand = minhash_banded(stream).join(
             static_banded, ["band", "band_hash"]

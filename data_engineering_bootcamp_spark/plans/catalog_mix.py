@@ -656,7 +656,10 @@ def q_streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         q.stop()
-        got = spark.read.parquet(os.path.join(store, "live")).select(
+        # the store holds the stream's columns, reordered by the sink
+        got = spark.read.schema(ev.schema).parquet(
+            os.path.join(store, "live")
+        ).select(
             "user_id",
             F.col("event_id").alias("last_event_id"),
             F.col("event_type").alias("last_event_type"),
@@ -1705,7 +1708,7 @@ def q_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from ..operators.sketch import countmin_estimates
+    from ..operators.sketch import countmin_estimates, countmin_table
     from ..streaming.sinks import countmin_merge_batch_writer
     from .catalog_write import _snapshot
 
@@ -1738,7 +1741,9 @@ def q_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         q.stop()
-        counters = spark.read.parquet(os.path.join(store, "live"))
+        counters = spark.read.schema(
+            countmin_table(ev, "user_id", depth=4, width=1024).schema
+        ).parquet(os.path.join(store, "live"))
         exact_top = (
             ev.groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("n_exact"))

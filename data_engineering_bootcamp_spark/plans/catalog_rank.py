@@ -42,7 +42,7 @@ from ..operators.bpe import (
     bpe_train_merges_batched,
     spaced_utf8_bytes,
 )
-from ..sources.readers import load_table
+from ..sources.readers import load_table, parquet_schema
 from .catalog_write import _snapshot
 
 
@@ -364,7 +364,7 @@ def q_streaming_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "text").repartition(4).write.mode(
             "overwrite"
         ).parquet(src)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -538,7 +538,7 @@ def q_streaming_embedding_admission(
             "vec_id", "embedding"
         )
         incoming.repartition(4).write.mode("overwrite").parquet(src)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -1940,12 +1940,14 @@ def q_doc_lang_id_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(NBL_MAX_LANGS + 1).collect()
     )
     if len(lang_rows) > NBL_MAX_LANGS:
+        toks.unpersist()
         raise ValueError(
             f"doc_lang_id_learned: >{NBL_MAX_LANGS} distinct languages "
             "in the train half — raise NBL_MAX_LANGS deliberately"
         )
     langs = [r.lang for r in lang_rows]
     if not langs:
+        toks.unpersist()
         raise ValueError("doc_lang_id_learned: empty train half")
     counts = (
         toks.where(F.col("seed"))
@@ -2202,6 +2204,7 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import _persist, release_caches
     from ..operators.partitioning import fan_out
     from ..operators.similarity import (
+        IVFPQ_CODES_SCHEMA,
         _full_coarse_lloyd,
         _full_subspace_lloyd,
         _round6_arr,
@@ -2231,7 +2234,7 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "embedding"
         )
         incoming.repartition(4).write.mode("overwrite").parquet(src)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -2246,7 +2249,9 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.realpath(live) if os.path.exists(live) else None
             )
             merged = (
-                spark.read.parquet(live).unionByName(fresh)
+                spark.read.schema(fresh.schema)
+                .parquet(live)
+                .unionByName(fresh)
                 if prev_target
                 else fresh
             )
@@ -2258,7 +2263,9 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         q.stop()
 
-        got = spark.read.parquet(os.path.join(store, "live")).select(
+        got = spark.read.schema(IVFPQ_CODES_SCHEMA).parquet(
+            os.path.join(store, "live")
+        ).select(
             F.col("vid").alias("vec_id"),
             "bucket",
             *[
@@ -2519,7 +2526,7 @@ def q_ivfpq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         code_sum = sum(F.col(f"c{j}") for j in range(8))
         out = (
-            spark.read.parquet(live_dir)
+            spark.read.schema(live.schema).parquet(live_dir)
             .groupBy("bucket")
             .agg(
                 F.count(F.lit(1)).alias("n_vecs"),

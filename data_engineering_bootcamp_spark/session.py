@@ -19,7 +19,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def parse_cpus(raw: str | None, default: int = 32) -> int:
+    """Core count from a ``SPARK_GRAFT_CPUS`` value: a positive integer,
+    else ``default`` (unset, empty, non-numeric, zero or negative
+    values degrade to the default instead of failing the import)."""
+    try:
+        n = int(raw or "")
+    except ValueError:
+        return default
+    return n if n > 0 else default
+
+
+# parsed once: the local master's thread count and the static shuffle
+# partition hint are the same number
+CPUS = parse_cpus(os.environ.get("SPARK_GRAFT_CPUS"))
 
 
 def get_spark(
@@ -36,13 +50,12 @@ def get_spark(
     on null-on-out-of-bounds array access semantics (Spark `get`,
     M3/src/jobs/monthly_user_site_hits_job.py:11-13).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{CPUS}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or CPUS),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

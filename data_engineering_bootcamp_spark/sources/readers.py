@@ -7,12 +7,29 @@ registration, M3/src/jobs/players_scd_job.py:43).
 Scale note: readers return plain DataFrames over columnar parquet so
 Catalyst's predicate pushdown / column pruning / partition pruning apply
 unchanged on a cluster. No data touches the driver.
+
+Schema resolution: a parquet read without a schema makes Spark run a
+footer-inference job before the scan is even planned. Table reads and
+reads made only to learn a schema resolve it through
+``parquet_schema`` in this module, which runs that inference once per
+file identity and serves the result from a bounded in-process cache
+after that; readers then pass the schema explicitly, so an unchanged
+table is scanned without the extra job. Reads whose schema is already
+known (a store written by the same query) pass that schema and skip
+inference altogether.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import stat
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -26,6 +43,77 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+
+# the parquet reader confs whose values change the types inference
+# gives a column (or, for mergeSchema, which footers it reads)
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_CACHE_SIZE = 256
+_schemas: OrderedDict[tuple, str] = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def _raise(err: OSError) -> None:
+    raise err
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(real path, sorted (relative name, size, mtime_ns, inode) of every
+    file under it), or None when the path cannot be stat'ed locally
+    (a remote URI, a missing path, an unreadable directory)."""
+    try:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+        files = [(os.path.basename(real), st)]
+        if stat.S_ISDIR(st.st_mode):
+            files = [
+                (os.path.relpath(f, real), os.stat(f))
+                for root, _dirs, names in os.walk(
+                    real, onerror=_raise, followlinks=True
+                )
+                for f in (os.path.join(root, n) for n in names)
+            ]
+    except (OSError, ValueError):
+        return None
+    return real, tuple(
+        sorted((n, s.st_size, s.st_mtime_ns, s.st_ino) for n, s in files)
+    )
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark's own inference gives the parquet data at
+    ``path`` under the session's current parquet typing confs.
+
+    Inference is a Spark job (``SchemaMergeUtils.mergeSchemasInParallel``
+    reads the footers), so its result is cached per file identity: the
+    real path, the name, size, mtime and inode of every file in the
+    listing, and the values of the confs in ``_SCHEMA_CONFS``. Any
+    rewrite, added or removed file, or conf change is a new key and
+    infers again; the cache keeps the ``_SCHEMA_CACHE_SIZE`` most
+    recently used keys. A path that cannot be stat'ed locally is
+    inferred on every call."""
+    ident = _file_identity(path)
+    key = None
+    if ident is not None:
+        key = ident + tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+        with _schemas_lock:
+            cached = _schemas.get(key)
+            if cached is not None:
+                _schemas.move_to_end(key)
+                return StructType.fromJson(json.loads(cached))
+    schema = spark.read.parquet(path).schema
+    if key is not None:
+        with _schemas_lock:
+            _schemas[key] = schema.json()
+            if len(_schemas) > _SCHEMA_CACHE_SIZE:
+                _schemas.popitem(last=False)
+    return schema
 
 
 def normalize_ts(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -90,11 +178,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session-timezone dependence. normalize_ts stays as the fallback
     for DataFrames that arrive already typed NTZ.
 
-    SCOPING: both confs are saved and restored around the read, so the
-    caller's own unrelated ``spark.read.parquet`` calls keep their
-    session's typing (``spark.read.parquet`` resolves the schema
-    eagerly, so the confs have done their type-shaping work before the
-    restore). One documented residual: when the scan surfaces a legacy
+    SCOPING: both confs are saved and restored around schema
+    resolution, so the caller's own unrelated ``spark.read.parquet``
+    calls keep their session's typing. The schema is resolved once per
+    file identity and conf values (``parquet_schema``): the first read
+    of a table runs Spark's inference job under these confs, later
+    reads of the unchanged file reuse that schema and pass it to the
+    reader explicitly, so they launch no job; a rewritten file infers
+    again. Either way the schema is fixed before the restore. One
+    documented residual: when the scan surfaces a legacy
     TIMESTAMP(NANOS) column (a ``bigint`` ts), ``nanosAsLong`` must
     stay set for the session — the per-file parquet schema conversion
     re-reads that conf at EXECUTION time, and restoring it would make
@@ -105,16 +197,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     }
+    path = f"{sf_dir}/{name}.parquet"
     prev = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
-    df = None
+    schema = None
     try:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        schema = parquet_schema(spark, path)
+        df = spark.read.schema(schema).parquet(path)
     finally:
-        has_nanos_ts = df is None or any(
+        has_nanos_ts = schema is None or any(
             f.name == "ts" and f.dataType.simpleString() == "bigint"
-            for f in df.schema.fields
+            for f in schema.fields
         )
         for k, v in prev.items():
             if k == "spark.sql.legacy.parquet.nanosAsLong" and has_nanos_ts:

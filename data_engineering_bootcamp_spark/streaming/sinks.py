@@ -247,7 +247,7 @@ def upsert_batch_writer(
             os.path.realpath(live) if os.path.exists(live) else None
         )
         if prev_target:
-            existing = spark.read.parquet(live)
+            existing = spark.read.schema(fresh.schema).parquet(live)
             merged = (
                 existing.unionByName(fresh)
                 .groupBy(*key_cols)
@@ -292,7 +292,8 @@ def countmin_merge_batch_writer(
         )
         if prev_target:
             merged = (
-                spark.read.parquet(live)
+                spark.read.schema(fresh.schema)
+                .parquet(live)
                 .unionByName(fresh)
                 .groupBy("row", "pos")
                 .agg(F.sum("cnt").alias("cnt"))

@@ -906,6 +906,27 @@ def test_doc_lang_id_learned_python_replay(spark, sf_dir):
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "attr, value",
+    [("NBL_MAX_LANGS", 0), ("NBL_SPLIT_HEX", "")],
+    ids=["too_many_langs", "empty_train_half"],
+)
+def test_doc_lang_id_learned_error_releases_tokens(
+    spark, sf_small, monkeypatch, attr, value
+):
+    """Both ValueError paths (class-set overflow, empty train half) run
+    after the shared token stream is persisted; they must unpersist it
+    before raising."""
+    from data_engineering_bootcamp_spark.plans import catalog_rank
+
+    monkeypatch.setattr(catalog_rank, attr, value)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    before = persisted.size()
+    with pytest.raises(ValueError, match="doc_lang_id_learned"):
+        catalog_rank.q_doc_lang_id_learned(spark, sf_small)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_bpe_batched_k1_equals_single(spark, sf_dir):
     """VERDICT r15 #8: with k = 1 the batched trainer degenerates to
     the single-pair trainer exactly — same rules, same counts, same

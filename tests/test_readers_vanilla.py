@@ -15,13 +15,24 @@ testdata regeneration.
 """
 
 import datetime as dt
+import shutil
+import sys
+import threading
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from data_engineering_bootcamp_spark.sources.readers import load_table
+from data_engineering_bootcamp_spark.sources import readers
+from data_engineering_bootcamp_spark.sources.readers import (
+    TESTDATA_TABLES,
+    load_table,
+    normalize_ts,
+    parquet_schema,
+)
 
 # one unambiguous UTC instant: 2024-01-15T12:34:56.789Z
 EPOCH_US = 1705322096_789000
@@ -37,6 +48,10 @@ def _unset(spark, key):
 
 def _vanilla(spark):
     _unset(spark, "spark.sql.legacy.parquet.nanosAsLong")
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
 
 
 def _write_variant(tmpdir, variant: str) -> str:
@@ -120,6 +135,114 @@ def test_load_table_on_driver_testdata(spark, sf_small):
         .count()
         > 0
     )
+
+
+def test_warm_load_table_launches_no_job(spark, sf_small):
+    """A second load_table of an unchanged table reuses the schema
+    resolved by the first (no inference job), and that schema is the
+    one a cold spark.read.parquet inference gives under load_table's
+    typing confs, nullability included."""
+    _vanilla(spark)
+    confs = {
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    }
+    for name in TESTDATA_TABLES:
+        load_table(spark, sf_small, name)
+        j0 = _jobs(spark)
+        warm = load_table(spark, sf_small, name)
+        assert _jobs(spark) == j0, name
+
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            cold = normalize_ts(
+                spark, spark.read.parquet(f"{sf_small}/{name}.parquet")
+            )
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        # StructField equality covers name, type, nullability, metadata
+        assert warm.schema == cold.schema, name
+
+
+def test_rewritten_table_is_reinferred(spark, tmp_path):
+    """Rewriting a table file in place with another ts encoding must
+    not serve the schema resolved for the old file: load_table infers
+    again and ts still normalizes to the same instant."""
+    _vanilla(spark)
+    d = _write_variant(tmp_path, "nanos")
+    ev = load_table(spark, d, "events")
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    us = F.unix_micros("ts").alias("us")
+    assert ev.orderBy("event_id").select(us).first()["us"] == EPOCH_US
+
+    ntz = _write_variant(tmp_path, "micros_ntz")
+    shutil.copyfile(f"{ntz}/events.parquet", f"{d}/events.parquet")
+    j0 = _jobs(spark)
+    ev = load_table(spark, d, "events")
+    assert _jobs(spark) > j0  # inferred, not served from the cache
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    assert ev.orderBy("event_id").select(us).first()["us"] == EPOCH_US
+
+
+def _col_of(path: str) -> str:
+    return path.rsplit("/", 1)[-1].replace(".", "_")
+
+
+# just what parquet_schema touches: conf.get and read.parquet(path).schema,
+# here a one-column schema named after the file, so a schema served for
+# the wrong path is visible
+_FAKE_SESSION = SimpleNamespace(
+    conf=SimpleNamespace(get=lambda _key, default=None: default),
+    read=SimpleNamespace(
+        parquet=lambda path: SimpleNamespace(
+            schema=StructType([StructField(_col_of(path), LongType())])
+        )
+    ),
+)
+
+
+def test_schema_cache_under_concurrent_eviction(tmp_path):
+    """More threads than cores resolve more distinct files than the
+    cache holds, with a shortened switch interval: every call must get
+    its own file's schema (no lost or crossed update, no KeyError from
+    an eviction racing a hit) and the cache must stay bounded."""
+    n_files = readers._SCHEMA_CACHE_SIZE + 44
+    paths = []
+    for i in range(n_files):
+        p = tmp_path / f"t{i}.parquet"
+        p.write_bytes(b"x")
+        paths.append(str(p))
+    errors: list = []
+
+    def work(offset: int) -> None:
+        try:
+            for k in range(2 * n_files):
+                path = paths[(offset * 37 + k) % n_files]
+                got = parquet_schema(_FAKE_SESSION, path)
+                if got.fieldNames() != [_col_of(path)]:
+                    errors.append((path, got.fieldNames()))
+        except Exception as exc:  # reported through `errors`
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(readers._schemas) <= readers._SCHEMA_CACHE_SIZE
 
 
 def test_streaming_gate_self_sufficient(spark, sf_small):

@@ -72,6 +72,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
+from data_engineering_bootcamp_spark.session import CPUS  # noqa: E402
 from tests.oracle_harness import compare, duck_con  # noqa: E402
 
 TIMES_PATH = os.path.join(os.path.dirname(__file__), "..",
@@ -461,9 +462,7 @@ def main() -> int:
                     # the mc marker runs one stream per
                     # $SPARK_GRAFT_CPUS; bench.py only applies
                     # host_factor_mc when its thread count matches
-                    "cpu_marker_mc_threads": max(
-                        1, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-                    ),
+                    "cpu_marker_mc_threads": CPUS,
                     "times": {
                         k: round(_st.median(v), 2)
                         for k, v in runs.items()
