@@ -20,11 +20,13 @@ behavior (used while iterating).
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
 import time
 
+from data_engineering_bootcamp_spark.operators.dedup import release_caches
 from data_engineering_bootcamp_spark.plans.catalog import QUERIES
 from data_engineering_bootcamp_spark.session import CPUS, get_spark
 
@@ -183,20 +185,29 @@ HEADLINE = [
 ]
 
 
-def _cpu_marker_mean(samples: int = 3) -> float:
-    """Mean wall time of a fixed single-thread workload over N runs."""
-    acc = 0.0
+def cpu_marker(samples: int = 3) -> tuple[float, float]:
+    """Fixed-work single-thread marker: (best, mean) wall time of N runs.
+
+    The one definition behind every tool's host-speed estimate. Each
+    caller picks its estimator: bench.py and tools/bench_tail.py use
+    the MEAN (it must track the average contention the queries ran
+    under — a lucky quiet slice would read as an idle box), while
+    tools/gate_check.py uses the BEST (its marker MULTIPLIES the
+    perf-gate threshold, so one contended sample must not loosen the
+    gate) and records the mean alongside it for bench.py's
+    like-for-like host_factor."""
+    times = []
     for _ in range(samples):
         t0 = time.perf_counter()
         x = 0
         for i in range(10_000_000):
             x += i
-        acc += time.perf_counter() - t0
-    return round(acc / samples, 3)
+        times.append(time.perf_counter() - t0)
+    return round(min(times), 3), round(sum(times) / len(times), 3)
 
 
 def _cpu_marker_mc_mean(samples: int = 2) -> float:
-    """MULTI-core twin of `_cpu_marker_mean` (VERDICT r16 #1): the
+    """MULTI-core twin of `cpu_marker`: the
     single-thread marker stayed flat (0.42 -> 0.43, 3%) across a round
     whose common-set wall moved ~26%, because the observed drift on
     this box is MULTI-core throughput (cgroup/noisy-neighbor
@@ -229,6 +240,102 @@ def _cpu_marker_mc_mean(samples: int = 2) -> float:
             list(pool.map(work, range(n)))
             acc += time.perf_counter() - t0
     return round(acc / samples, 3)
+
+
+# Perf-gate thresholds shared by tools/gate_check.py and
+# tools/bench_tail.py. Floor semantics: the floor applies to the
+# BASELINE — an entry whose baseline is 0.4 s cannot distinguish a
+# code regression from +-1 s of scheduler noise (four DIFFERENT
+# sub-second entries tripped across three identical-code runs), so
+# ratio-gating it is pure noise; a REAL regression on a tiny entry is
+# still caught by the absolute cap (0.4 s -> >5 s cannot be jitter).
+PERF_FLOOR_SEC = 1.0  # ratio-gate only entries whose BASELINE is this long
+PERF_ABS_SEC = 5.0    # ... or whose current time exceeds this
+HOST_FACTOR_CAP = 2.0  # loosen a perf threshold at most this much
+
+
+def is_slow(now: float, base: float, cap: float) -> bool:
+    """The perf-gate predicate: `now` regressed past `cap` x `base`
+    (ratio rounded to 2 places, as the gates print it) and the entry is
+    long enough for the ratio to mean something."""
+    return round(now / base, 2) > cap and (
+        base >= PERF_FLOOR_SEC or now >= PERF_ABS_SEC
+    )
+
+
+def median(reps: list[float], extended: bool = False) -> float:
+    """Median of per-rep seconds: the robust location for 3 reps on a
+    noisy host — one contended rep can no longer dominate the artifact.
+
+    Even counts take the mean of the two middles, except when
+    `extended` (the noise guardrail bought the extra rep): there the
+    LOWER middle applies, because the upper-middle of
+    [a, b, HIGH, HIGH] would hand the headline to a contended sample —
+    the exact outcome the extra rep exists to avoid. For a
+    plainly-configured even rep count that rule would silently report
+    the MINIMUM, an optimistic bias, so the true median applies."""
+    srt = sorted(reps)
+    n = len(srt)
+    if n % 2 == 1:
+        return srt[n // 2]
+    if extended:
+        return srt[(n - 1) // 2]
+    return round((srt[n // 2 - 1] + srt[n // 2]) / 2, 3)
+
+
+def warm(spark, sf_dir: str) -> None:
+    """Pre-pay session start-up so per-query numbers measure execution:
+    the JVM + parquet footers via the cheapest query, and the session's
+    FIRST local-relation build — the first createDataFrame pays ~1.9 s
+    of Py4J/serializer init ONCE per session, and that cost lands on
+    whichever query first builds a bound-relation (histogram_quantiles
+    rep 1 once read 3.7 s — isolated it runs 0.95 s)."""
+    QUERIES["pricing_summary"](spark, sf_dir).count()
+    spark.createDataFrame([(1,)], "warm int").count()
+
+
+def gc_gap(spark) -> None:
+    """Collect BOTH runtimes in the untimed gap between runs. Py4j
+    frees JVM-side DataFrame/RDD handles lazily, so checkpoint blocks
+    and shuffle state from run N survived into run N+1's timed
+    window and surfaced as 2-5x spikes on the iterative queries
+    (pagerank_parts measured [17.0, 8.7, 10.2, 21.9] s back-to-back vs
+    [7.5, 6.4, 7.3, 6.1] s with this collection — same code). A timed
+    region still contains every cost the query itself incurs, including
+    its own GC pressure; what this removes is CROSS-QUERY contamination.
+    Artifacts from BENCH_r15 and earlier were measured without it — see
+    OPTIMIZATION_r16.md."""
+    try:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+    except Exception:  # noqa: BLE001 — hygiene must never fail a run
+        pass
+
+
+def run_once(spark, fn, sf_dir: str) -> float:
+    """Seconds to build `fn(spark, sf_dir)` and execute it to completion
+    through the `noop` sink (results are not collected).
+
+    Success or failure, the untimed tail releases what the run
+    acquired: streaming queries still active (a failed streaming entry
+    would otherwise keep running into the next entry's timed window),
+    the dedup operators' persisted blocks, then the GC gap. An
+    exception from `fn` or the write propagates to the caller."""
+    t0 = time.perf_counter()
+    try:
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3)
+    finally:
+        try:
+            for q in spark.streams.active:
+                q.stop()
+        except Exception:  # noqa: BLE001 — release the rest regardless
+            pass
+        try:
+            release_caches()
+        except Exception:  # noqa: BLE001
+            pass
+        gc_gap(spark)
 
 
 # The compact stdout line is the driver's ground truth, and its
@@ -314,29 +421,13 @@ def main() -> None:
     # idle total, r9: 133.2 s idle total, zero steal, zero plan change)
     # was unfalsifiable because no artifact recorded how fast the box
     # itself was that day; this pins it (observed 0.3-0.7 s). MEAN of
-    # 3 samples (not best-of): the marker's job here is to estimate the
-    # average contention the queries actually ran under, and a lucky
-    # quiet slice would read as an idle box while the queries were
-    # contended. Sampled again AFTER the run (below) for the same
-    # reason — the combined mean brackets the whole window.
-    cpu_marker = _cpu_marker_mean()
-    cpu_marker_mc = _cpu_marker_mc_mean()
+    # 3 samples (see `cpu_marker`), sampled again AFTER the run (below)
+    # so the combined mean brackets the whole window.
+    marker = cpu_marker()[1]
+    marker_mc = _cpu_marker_mc_mean()
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM + parquet footers with the cheapest query so per-query
-    # numbers measure execution, not session startup
-    QUERIES["pricing_summary"](spark, sf_dir).count()
-    # ... and the session's FIRST local-relation build (VERDICT r11 #1):
-    # the first createDataFrame pays ~1.9 s of Py4J/serializer init
-    # ONCE per session, and that cost lands on whichever headline query
-    # first builds a bound-relation (r11: histogram_quantiles rep 1
-    # read 3.7 s — isolated it runs 0.95 s; r10's countmin-family
-    # neighbors had absorbed it). Session startup, not execution —
-    # pre-pay it here.
-    spark.createDataFrame([(1,)], "warm int").count()
-
-    from data_engineering_bootcamp_spark.operators.dedup import release_caches
+    warm(spark, sf_dir)
 
     # Fault isolation: one broken query must never zero the whole perf
     # signal (round 2's bench died at query 15 and emitted nothing).
@@ -366,46 +457,14 @@ def main() -> None:
         rep_i = 0
         while rep_i < n_reps:
             rep_i += 1
-            t0 = time.perf_counter()
             try:
-                df = fn(spark, sf_dir)
-                # force full execution without driver-side collection
-                df.write.format("noop").mode("overwrite").save()
-                per_rep.append(round(time.perf_counter() - t0, 3))
+                per_rep.append(run_once(spark, fn, sf_dir))
             except Exception as exc:  # noqa: BLE001 — survive any fault
                 # record the fault but KEEP any reps that already
                 # succeeded — discarding clean timings would make a
                 # transient last-rep fault erase the whole signal
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 break
-            finally:
-                # dedup operators persist signature blocks for their own
-                # multi-join plans; release them so the session stays flat
-                try:
-                    release_caches()
-                except Exception:
-                    pass
-                # Measurement-hygiene fix (r16, guide §1): collect BOTH
-                # runtimes in the untimed gap between reps. Py4j frees
-                # JVM-side DataFrame/RDD handles lazily, so checkpoint
-                # blocks and shuffle state from rep N survived into rep
-                # N+1's timed window and surfaced as 2-5x spikes on the
-                # iterative queries (pagerank_parts measured
-                # [17.0, 8.7, 10.2, 21.9] s back-to-back vs
-                # [7.5, 6.4, 7.3, 6.1] s with this collection — same
-                # code). The timed region still contains every cost the
-                # query itself incurs, including its own GC pressure;
-                # what this removes is CROSS-QUERY contamination, the
-                # same class as the pre-paid first-createDataFrame init
-                # above. Old artifacts (BENCH_r15/earlier) were measured
-                # without it — see OPTIMIZATION_r16.md.
-                try:
-                    import gc as _gc
-
-                    _gc.collect()
-                    spark.sparkContext._jvm.System.gc()
-                except Exception:
-                    pass
             # noise guardrail (VERDICT r9 #5): a >2x spread across reps
             # of identical code means at least one rep was contended
             # (r9 neardup_clusters: [7.3, 15.7, 6.1] moved the headline
@@ -422,31 +481,14 @@ def main() -> None:
                 n_reps += 1
                 noisy.append(name)
         if per_rep:
-            # median: the robust location for 3 reps on a noisy host —
-            # one contended rep can no longer dominate the artifact.
-            # LOWER-middle for even counts ONLY when the noise
-            # guardrail bought the extra rep (ADVICE r10): there the
-            # upper-middle of [a, b, HIGH, HIGH] would hand the
-            # headline to a contended sample — the exact outcome the
-            # extra rep exists to avoid. For a plainly-configured even
-            # rep count (SPARK_GRAFT_BENCH_REPS=2) that rule would
-            # silently report the MINIMUM, an optimistic bias, so the
-            # true median (mean of the two middles) applies instead.
-            srt = sorted(per_rep)
-            n = len(srt)
-            if n % 2 == 1:
-                timings[name] = srt[n // 2]
-            elif name in noisy:
-                timings[name] = srt[(n - 1) // 2]
-            else:
-                timings[name] = round((srt[n // 2 - 1] + srt[n // 2]) / 2, 3)
+            timings[name] = median(per_rep, extended=name in noisy)
             reps_out[name] = per_rep
             mins[name] = min(per_rep)
 
     # second marker batch AFTER the run; the combined mean estimates
     # the average host speed across the whole bench window
-    cpu_marker = round((cpu_marker + _cpu_marker_mean()) / 2, 3)
-    cpu_marker_mc = round((cpu_marker_mc + _cpu_marker_mc_mean()) / 2, 3)
+    marker = round((marker + cpu_marker()[1]) / 2, 3)
+    marker_mc = round((marker_mc + _cpu_marker_mc_mean()) / 2, 3)
     # host-factor normalization (VERDICT r10 #3): BENCH_r10 on a
     # contended box read as a 16% regression that the idle twin showed
     # was really a 5% improvement. The committed idle-host marker
@@ -472,7 +514,7 @@ def main() -> None:
             _doc = json.load(fh)
         _base_marker = _doc.get("cpu_marker_mean") or _doc.get("cpu_marker")
         if _base_marker:
-            host_factor = round(cpu_marker / _base_marker, 3)
+            host_factor = round(marker / _base_marker, 3)
         # multi-core twin (VERDICT r16 #1): the committed baseline is
         # taken by gate_check --update-times on an idle host; the
         # ratio captures the 1.3-1.5x MULTI-core drift the
@@ -487,7 +529,7 @@ def main() -> None:
         # thread count predates this guard and is assumed 32.
         _base_mc_threads = int(_doc.get("cpu_marker_mc_threads") or 32)
         if _base_marker_mc and CPUS == _base_mc_threads:
-            host_factor_mc = round(cpu_marker_mc / _base_marker_mc, 3)
+            host_factor_mc = round(marker_mc / _base_marker_mc, 3)
     except Exception:
         pass
 
@@ -570,8 +612,8 @@ def main() -> None:
         # $SPARK_GRAFT_CPUS to judge whether the box was idle
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
-        "cpu_marker_sec": cpu_marker,
-        "cpu_marker_mc_sec": cpu_marker_mc,
+        "cpu_marker_sec": marker,
+        "cpu_marker_mc_sec": marker_mc,
     }
     if errors:
         out["errors"] = errors
@@ -613,8 +655,8 @@ def main() -> None:
         "bench_reps": reps,
         "n_queries": len(timings),
         "full_artifact": "BENCH_full.json" if full_path else None,
-        "cpu_marker_sec": cpu_marker,
-        "cpu_marker_mc_sec": cpu_marker_mc,
+        "cpu_marker_sec": marker,
+        "cpu_marker_mc_sec": marker_mc,
         "min_total_sec": out["min_total_sec"],
         "host_factor": host_factor,
         "host_factor_mc": host_factor_mc,

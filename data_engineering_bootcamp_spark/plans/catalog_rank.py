@@ -50,19 +50,23 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def _tok_array() -> Column:
+    """The catalog's standard corpus tokenization of `text` as an array
+    column (matches vocab_top_tokens / bpe_merge_candidates /
+    tfidf_top_terms): lower, collapse whitespace, split, drop empties.
+    A function, not a constant: a Column needs an active session."""
+    return F.filter(
+        F.split(
+            F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
+            " ",
+        ),
+        lambda t: t != F.lit(""),
+    )
+
+
 def _tokens(docs: DataFrame, with_doc: bool = False) -> DataFrame:
-    """The catalog's standard corpus tokenization (matches
-    vocab_top_tokens / bpe_merge_candidates / tfidf_top_terms):
-    lower, collapse whitespace, split, drop empties."""
-    tok = F.explode(
-        F.filter(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
-                " ",
-            ),
-            lambda t: t != F.lit(""),
-        )
-    ).alias("term")
+    """One row per token of `_tok_array`, as column `term`."""
+    tok = F.explode(_tok_array()).alias("term")
     return docs.select("doc_id", tok) if with_doc else docs.select(tok)
 
 
@@ -1344,15 +1348,7 @@ def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    broadcast-build job and the scoring job never race to
     #    populate the cache (the r16 pagerank cache-race finding).
     #    Registry-released like every dedup-family cache.
-    tok = F.explode(
-        F.filter(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
-                " ",
-            ),
-            lambda t: t != F.lit(""),
-        )
-    ).alias("term")
+    tok = F.explode(_tok_array()).alias("term")
     pre = docs.select(
         "doc_id",
         "text",
@@ -1669,14 +1665,10 @@ def q_training_export_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("long").alias("sym_id"),
             )
         )
-        toks_arr = F.filter(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-            ),
-            lambda t: t != F.lit(""),
-        )
         stream = (
-            docs.select("doc_id", F.posexplode(toks_arr).alias("pos", "term"))
+            docs.select(
+                "doc_id", F.posexplode(_tok_array()).alias("pos", "term")
+            )
             .where(
                 (F.length("term") >= 2) & F.col("term").rlike("^[a-z]+$")
             )
@@ -1889,15 +1881,7 @@ def q_doc_lang_id_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per DOCUMENT before the token explode; the shared hashed token
     # stream feeds the training counts AND the scoring pass, so it is
     # persisted and eagerly materialized (cache-race discipline).
-    tok = F.explode(
-        F.filter(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
-                " ",
-            ),
-            lambda t: t != F.lit(""),
-        )
-    ).alias("term")
+    tok = F.explode(_tok_array()).alias("term")
     pre = docs.select(
         "doc_id",
         "text",

@@ -468,3 +468,97 @@ def test_ivfpq_probe_join_is_equi(plans):
         "IVFPQ candidate pass regressed to a nested-loop scan"
     )
     assert _node_count("BroadcastHashJoin", plan) >= 2
+
+
+# dedup_keep_first's window over the fingerprint key: the expensive
+# uncached body of the curation pipelines' `kept` relation
+_KEEP_FIRST_WINDOW = re.compile(r"row_number\(\) windowspecdefinition\(fp#")
+
+
+def _plan_children(p) -> list:
+    """Child plans of a JVM SparkPlan, looking through adaptive
+    wrappers, query stages, reused exchanges and subqueries (but not
+    into an InMemoryTableScan's cached plan — callers decide that)."""
+    name = p.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [p.executedPlan()]
+    if name.endswith("QueryStage"):
+        return [p.plan()]
+    if name == "ReusedExchange":
+        return [p.child()]
+    return [
+        seq.apply(i)
+        for seq in (p.children(), p.subqueries())
+        for i in range(seq.size())
+    ]
+
+
+def _kept_reads(plan, identity) -> tuple[set, int]:
+    """(identities of the caches `kept` is read from, keep-first windows
+    evaluated outside any cache) over one JVM physical plan, descending
+    into every cached relation built on top of `kept`."""
+    caches: set = set()
+    stray = 0
+
+    def keep_first(p) -> bool:
+        return p.nodeName() == "Window" and bool(
+            _KEEP_FIRST_WINDOW.search(p.simpleString(1000))
+        )
+
+    def builds_kept(p) -> bool:
+        if p.nodeName() == "InMemoryTableScan":
+            return False
+        return keep_first(p) or any(builds_kept(k) for k in _plan_children(p))
+
+    def walk(p) -> None:
+        nonlocal stray
+        if p.nodeName() == "InMemoryTableScan":
+            rel = p.relation()
+            if builds_kept(rel.cachedPlan()):
+                caches.add(identity(rel.cacheBuilder()))
+            else:
+                walk(rel.cachedPlan())
+            return
+        stray += keep_first(p)
+        for k in _plan_children(p):
+            walk(k)
+
+    walk(plan)
+    return caches, stray
+
+
+@pytest.mark.parametrize(
+    "name", ["corpus_curation_pipeline", "corpus_curation_pipeline_learned"]
+)
+def test_curation_kept_is_populated_once(spark, name):
+    """`kept` (catalog_extra's keep-first relation in
+    both curation pipelines) is a lazy persist with several consumers —
+    the near-dup operator's gram caches (executed at plan build by the
+    connected-components loop) and the final anti join. Pin that every
+    consumer reads the ONE cached relation and that no plan re-derives
+    the fingerprint + keep-first body outside it: a second consumer
+    built over an uncached copy would recompute it silently. Checked on
+    the executed query and on every relation the run persisted."""
+    from data_engineering_bootcamp_spark.operators import dedup
+
+    identity = spark.sparkContext._jvm.java.lang.System.identityHashCode
+    try:
+        df = QUERIES[name](spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+        caches, stray = _kept_reads(
+            df._jdf.queryExecution().executedPlan(), identity
+        )
+        for cached in dedup._CACHED:
+            c, s = _kept_reads(
+                cached._jdf.queryExecution().executedPlan(), identity
+            )
+            caches |= c
+            stray += s
+        assert len(caches) == 1, (
+            f"{name}: `kept` read from {len(caches)} cached relations"
+        )
+        assert stray == 0, (
+            f"{name}: keep-first body evaluated {stray}x outside the cache"
+        )
+    finally:
+        dedup.release_caches()

@@ -4,9 +4,11 @@
 wall time was never committed; the sf0.01 gate times them every round,
 but scale behavior was unmeasured).
 
-Methodology matches bench.py exactly — median of 3 noop-write
-executions per entry on the shared session, cpu marker + loadavg
-bracketing so a contended run is detectable post-hoc — over
+Methodology is bench.py's by construction — the same `warm`,
+`run_once` (noop-write execution, released caches and GC gap between
+runs) and `median` over 3 reps per entry on the shared session, cpu
+marker + loadavg bracketing so a contended run is detectable
+post-hoc — over
 `set(QUERIES) - set(HEADLINE)`. Three entry classes get a `class`
 annotation in the artifact so the numbers are read correctly:
 
@@ -22,30 +24,28 @@ committed baseline BENCH_tail_baseline.json with CLASS-APPROPRIATE
 thresholds — batch/write 2x (the headline discipline), streaming/
 replay/allpairs 3x (micro-batch machinery and driver-side plan
 composition swing harder run-to-run than batch plans). The threshold
-scales by the host-speed ratio (marker_now / marker_then, capped 2x)
-exactly like tools/gate_check.py, the absolute floor is the same
-(baseline >= 1 s, or now >= 5 s), and a tripped entry is re-timed
-once (best sample kept) before it fails. Exit 2 on confirmed
+scales by the host-speed ratio (marker_now / marker_then, capped at
+bench.HOST_FACTOR_CAP), the slow predicate is bench.is_slow (the one
+tools/gate_check.py uses), and a tripped entry is re-timed once (best
+sample kept) before it fails. Exit 2 on confirmed
 regressions; --no-perf-gate reports ratios without failing;
 --update-baseline rewrites the baseline from this run (idle host,
 after intentional changes).
 
 Usage: python tools/bench_tail.py [sf_dir] [--out=PATH]
          [--no-perf-gate] [--update-baseline]
-Writes BENCH_tail_r14.json at the repo root by default.
+Writes BENCH_tail.json at the repo root by default.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # noqa: E402 — reuse HEADLINE + the cpu marker
+import bench  # noqa: E402 — HEADLINE and the measurement core
 from data_engineering_bootcamp_spark.plans.catalog import QUERIES  # noqa: E402
 from data_engineering_bootcamp_spark.session import get_spark  # noqa: E402
 
@@ -63,9 +63,6 @@ CLASS_RATIO = {
     "replay": 3.0,
     "allpairs": 3.0,
 }
-PERF_FLOOR_SEC = 1.0
-PERF_ABS_SEC = 5.0
-HOST_FACTOR_CAP = 2.0
 
 
 def _klass(name: str) -> str:
@@ -87,7 +84,7 @@ def main() -> int:
     )
     out_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH_tail_r14.json",
+        "BENCH_tail.json",
     )
     no_perf_gate = "--no-perf-gate" in sys.argv[1:]
     update_baseline = "--update-baseline" in sys.argv[1:]
@@ -100,12 +97,10 @@ def main() -> int:
             baseline = json.load(fh)
     tail = [q for q in QUERIES if q not in set(bench.HEADLINE)]
     load_start = os.getloadavg()
-    cpu_marker = bench._cpu_marker_mean()
+    cpu_marker = bench.cpu_marker()[1]
     spark = get_spark(app_name="bench-tail")
     spark.sparkContext.setLogLevel("ERROR")
-    QUERIES["pricing_summary"](spark, sf_dir).count()
-    spark.createDataFrame([(1,)], "warm int").count()
-    from data_engineering_bootcamp_spark.operators.dedup import release_caches
+    bench.warm(spark, sf_dir)
 
     timings: dict[str, float] = {}
     reps_out: dict[str, list[float]] = {}
@@ -113,24 +108,15 @@ def main() -> int:
     for name in tail:
         per_rep: list[float] = []
         for _ in range(3):
-            t0 = time.perf_counter()
             try:
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                per_rep.append(round(time.perf_counter() - t0, 3))
+                per_rep.append(bench.run_once(spark, QUERIES[name], sf_dir))
             except Exception as exc:  # noqa: BLE001 — fault isolation
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 break
-            finally:
-                try:
-                    release_caches()
-                except Exception:
-                    pass
         # an entry that errored mid-run records ONLY under errors —
         # a median of 1-2 surviving reps must not read as a 3-rep median
         if per_rep and name not in errors:
-            timings[name] = round(statistics.median(per_rep), 3)
+            timings[name] = bench.median(per_rep)
             reps_out[name] = per_rep
         print(f"{name:34s} {timings.get(name, float('nan')):7.3f}s "
               f"{per_rep}", flush=True)
@@ -142,36 +128,22 @@ def main() -> int:
         base_times = baseline.get("times", {})
         base_marker = baseline.get("cpu_marker_sec") or cpu_marker
         host_factor = min(
-            HOST_FACTOR_CAP, max(1.0, cpu_marker / base_marker)
+            bench.HOST_FACTOR_CAP, max(1.0, cpu_marker / base_marker)
         )
         for name, now in sorted(timings.items()):
             base = base_times.get(name)
             if not base:
                 continue
-            ratio = round(now / base, 2)
-            ratios[name] = ratio
             cap = CLASS_RATIO[_klass(name)] * host_factor
-            slow = ratio > cap and (
-                base >= PERF_FLOOR_SEC or now >= PERF_ABS_SEC
-            )
+            slow = bench.is_slow(now, base, cap)
             if slow:
                 # confirm once: a lone contended sample must not fail
-                t0 = time.perf_counter()
                 try:
-                    QUERIES[name](spark, sf_dir).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    now2 = round(time.perf_counter() - t0, 3)
-                    release_caches()
-                    if now2 < now:
-                        now = now2
-                        ratio = round(now / base, 2)
-                        ratios[name] = ratio
-                        slow = ratio > cap and (
-                            base >= PERF_FLOOR_SEC or now >= PERF_ABS_SEC
-                        )
+                    now = min(now, bench.run_once(spark, QUERIES[name], sf_dir))
                 except Exception:  # noqa: BLE001 — keep prior sample
                     pass
+                slow = bench.is_slow(now, base, cap)
+            ratio = ratios[name] = round(now / base, 2)
             if slow:
                 perf_fails.append(name)
                 print(

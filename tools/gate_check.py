@@ -7,15 +7,15 @@ round 1), run every `__spark_entry__.queries()` entry and its
 
 Perf drift gate (VERDICT r5 #7): each entry's wall time is compared
 against the last committed baseline (GATECHECK_times.json, keyed by
-sf_dir). An entry regressing more than PERF_RATIO x — with an absolute
-floor of PERF_FLOOR_SEC so sub-second jitter can't trip it — is
+sf_dir). An entry regressing more than PERF_RATIO x — with the
+absolute floors of bench.is_slow so sub-second jitter can't trip it — is
 RE-TIMED (up to twice, best sample kept) and flagged only if it still
 exceeds the ratio (this host's throughput swings ~2.5x between
 identical-code point samples — see COVERAGE.md — so a single
 contended sample must not fail the gate). The threshold additionally
 scales by the HOST-SPEED ratio: --update-times stores a fixed-work
-single-thread cpu marker next to the times (same workload as
-bench.py's cpu_marker_sec), and a comparison run multiplies
+single-thread cpu marker next to the times (bench.cpu_marker, the
+workload behind bench.py's cpu_marker_sec), and a comparison run multiplies
 PERF_RATIO by max(1, marker_now/marker_then) — a box that is
 measurably 1.5x slower than when the baseline was taken does not
 spray false perf failures over unchanged code (observed r9: two
@@ -72,46 +72,19 @@ sys.path.insert(0, ".")
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
+from bench import (  # noqa: E402 — the shared marker, GC gap and slow predicate
+    HOST_FACTOR_CAP,
+    _cpu_marker_mc_mean,
+    cpu_marker,
+    gc_gap,
+    is_slow,
+)
 from data_engineering_bootcamp_spark.session import CPUS  # noqa: E402
 from tests.oracle_harness import compare, duck_con  # noqa: E402
 
 TIMES_PATH = os.path.join(os.path.dirname(__file__), "..",
                           "GATECHECK_times.json")
-PERF_RATIO = 2.0      # fail when now > ratio x baseline ...
-PERF_FLOOR_SEC = 1.0  # ... and the BASELINE is at least this long
-PERF_ABS_SEC = 5.0    # sub-floor entries still flag above this time
-# floor semantics (r9): the floor applies to the BASELINE — an entry
-# whose baseline is 0.4 s cannot distinguish a code regression from
-# +-1 s of scheduler noise (four DIFFERENT sub-second entries tripped
-# across three identical-code r9 runs), so ratio-gating it is pure
-# noise; a REAL regression on a tiny entry is still caught by the
-# absolute cap (0.4 s -> >5 s cannot be jitter on this box)
-
-
-HOST_FACTOR_CAP = 2.0  # loosen the perf threshold at most this much
-
-
-def _cpu_marker(samples: int = 3) -> tuple[float, float]:
-    """Fixed-work single-thread marker (bench.py's cpu_marker_sec).
-
-    Returns (best, mean) of N samples. Best-of-N (ADVICE r9) feeds THIS
-    tool's host_factor: the marker MULTIPLIES the perf-gate threshold —
-    one transiently contended sample (GC, cold interpreter, noisy
-    neighbor) would silently loosen the regression gate for the whole
-    run, so the minimum is the least contended estimate of the box's
-    true speed. The MEAN is recorded alongside it in the baseline file
-    (ADVICE r11): bench.py's marker is a mean (it must track average
-    contention across the bench window), and dividing a mean by a
-    best-of floor baked a constant ~5% inflation into host_factor —
-    the like-for-like estimator removes it."""
-    times = []
-    for _ in range(samples):
-        t0 = time.perf_counter()
-        x = 0
-        for i in range(10_000_000):
-            x += i
-        times.append(time.perf_counter() - t0)
-    return round(min(times), 3), round(sum(times) / len(times), 3)
+PERF_RATIO = 2.0  # fail when now > ratio x baseline (bench.is_slow)
 
 
 def main() -> int:
@@ -164,7 +137,8 @@ def main() -> int:
                 base_marker = doc.get("cpu_marker")
         except Exception:
             prev = {}
-    cur_marker, cur_marker_mean = _cpu_marker()
+    # best-of-3 drives the threshold; the mean is recorded for bench.py
+    cur_marker, cur_marker_mean = cpu_marker()
     host_factor = 1.0
     if base_marker:
         host_factor = max(1.0, cur_marker / base_marker)
@@ -350,11 +324,7 @@ def main() -> int:
             n_fail += 1
         base = prev.get(name)
         ratio = round(dt / base, 2) if base else None
-        slow = (
-            ratio is not None
-            and ratio > ratio_cap
-            and (base >= PERF_FLOOR_SEC or dt >= PERF_ABS_SEC)
-        )
+        slow = ratio is not None and is_slow(dt, base, ratio_cap)
         if slow and ok:
             # confirm before failing: re-time (twice) and keep the best
             # sample — a lone contended run must not fail the gate
@@ -371,9 +341,7 @@ def main() -> int:
                     if dt2 < dt:
                         dt = dt2
                         ratio = round(dt / base, 2)
-                        slow = ratio > ratio_cap and (
-                            base >= PERF_FLOOR_SEC or dt >= PERF_ABS_SEC
-                        )
+                        slow = is_slow(dt, base, ratio_cap)
                 except Exception:  # noqa: BLE001 — keep prior sample
                     break
         if slow:
@@ -390,18 +358,11 @@ def main() -> int:
             + ("" if ok else f"  {problems[0][:200]}"),
             flush=True,
         )
-        # untimed-gap collection (r16, same as bench.py): py4j frees
-        # JVM handles lazily, so entry N's checkpoint blocks/shuffle
-        # garbage otherwise lands in entry N+1's timed window — the
-        # cross-entry contamination behind sporadic 2-5x one-off SLOW
-        # flags on iterative entries deep into a 151-entry run
-        try:
-            import gc as _gc
-
-            _gc.collect()
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001 — hygiene must never fail the gate
-            pass
+        # untimed-gap collection (bench.gc_gap): entry N's checkpoint
+        # blocks/shuffle garbage otherwise lands in entry N+1's timed
+        # window — the cross-entry contamination behind sporadic 2-5x
+        # one-off SLOW flags on iterative entries deep into a full run
+        gc_gap(spark)
     print(json.dumps({k: v["ok"] for k, v in results.items()}))
     print(f"\n{len(results) - n_fail}/{len(results)} pass")
     if perf_fails:
@@ -417,8 +378,6 @@ def main() -> int:
         # sampled here so --update-times on an idle host pins BOTH
         # the single-thread and the full-width speed of the box
         try:
-            from bench import _cpu_marker_mc_mean
-
             marker_mc = _cpu_marker_mc_mean()
         except Exception:  # noqa: BLE001 — marker must never fail the gate
             marker_mc = None

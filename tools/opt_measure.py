@@ -3,8 +3,9 @@
 
 For each named catalog query: build the DataFrame at
 $SPARK_GRAFT_SF_DIR (default sf0.1), capture `.explain("formatted")`
-to plans/r16/<name>_<suffix>.txt, and time the noop-sink execution
-(guide §1.4) REPS times, printing per-rep seconds + median.
+to plans/<dir>/<name>_<suffix>.txt, and time the noop-sink execution
+(guide §1.4) REPS times with bench.py's `run_once`, printing per-rep
+seconds + bench.py's `median`.
 
 Usage:
   python tools/opt_measure.py [--suffix=before] [--reps=3] [--no-plan]
@@ -16,12 +17,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_engineering_bootcamp_spark.plans.catalog import QUERIES
-from data_engineering_bootcamp_spark.session import get_spark
+import bench  # noqa: E402 — the measurement core
+from data_engineering_bootcamp_spark.operators.dedup import release_caches  # noqa: E402
+from data_engineering_bootcamp_spark.plans.catalog import QUERIES  # noqa: E402
+from data_engineering_bootcamp_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -49,12 +51,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="opt-measure")
     spark.sparkContext.setLogLevel("ERROR")
-    # warm JVM + parquet footers + first local-relation build (same
-    # pre-pay as bench.py so per-query numbers measure execution)
-    QUERIES["pricing_summary"](spark, sf_dir).count()
-    spark.createDataFrame([(1,)], "warm int").count()
-
-    from data_engineering_bootcamp_spark.operators.dedup import release_caches
+    bench.warm(spark, sf_dir)
 
     results: dict[str, dict] = {}
     for name in names:
@@ -77,30 +74,13 @@ def main() -> None:
         per: list[float] = []
         for i in range(reps):
             spark.sparkContext.setJobDescription(f"{name} rep{i}")
-            t0 = time.perf_counter()
             try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                per.append(round(time.perf_counter() - t0, 3))
+                per.append(bench.run_once(spark, fn, sf_dir))
             except Exception as exc:  # noqa: BLE001
                 print(f"RUN-FAIL {name}: {exc}", flush=True)
                 break
-            finally:
-                try:
-                    release_caches()
-                except Exception:
-                    pass
-                # same untimed-gap collection as bench.py (r16): py4j
-                # frees JVM handles lazily; without this, rep N's
-                # garbage lands in rep N+1's timed window
-                try:
-                    import gc as _gc
-
-                    _gc.collect()
-                    spark.sparkContext._jvm.System.gc()
-                except Exception:
-                    pass
         spark.sparkContext.setJobDescription(None)
-        med = sorted(per)[len(per) // 2] if per else None
+        med = bench.median(per) if per else None
         results[name] = {"reps": per, "median": med}
         print(f"{name}: median={med} reps={per}", flush=True)
     print(json.dumps(results))

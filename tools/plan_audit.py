@@ -48,7 +48,7 @@ SKIP = {
     # iterative: eager per-round localCheckpoints execute at plan-build,
     # so the final plan is just the checkpointed-ranks scan; the
     # per-iteration shape (1 join + 1 groupBy) is audited by the
-    # pagerank section of BENCH_scale_r06.json instead
+    # pagerank section of BENCH_scale.json instead
     "pagerank_parts",
     # iterative BPE training: each step's argmax winner is eagerly
     # localCheckpointed at plan-build (the merge decision feeds the

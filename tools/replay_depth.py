@@ -44,7 +44,7 @@ extending ranges, which exercises plan growth without inventing data.
 Usage: python tools/replay_depth.py [sf_dir] [--out=PATH]
          [--cadence=N] [--ckpt-mode=lazy|eager|parquet]
          [--depths=8,16,31] [--no-aqe] [--no-codegen] [--skip-parity]
-Writes one JSON document (default REPLAY_DEPTH_r13.json at repo root).
+Writes one JSON document (default REPLAY_DEPTH.json at repo root).
 
 --ckpt-mode (r14, VERDICT r13 #5): how the mid-window checkpoint
 materializes. 'lazy' = localCheckpoint(eager=False) (the r13 form);
@@ -181,7 +181,7 @@ def main() -> int:
     sf_dir = os.path.abspath(args[0]) if args else "/root/testdata/sf0.01"
     out_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "REPLAY_DEPTH_r13.json",
+        "REPLAY_DEPTH.json",
     )
     cadence = 0
     ckpt_mode = "lazy"

@@ -2,7 +2,9 @@
 # Round-end evidence battery (the standing step since r9/r10): the full
 # oracle gate across every robustness axis, plus the test suite, each
 # logged to a committed artifact. Run at final HEAD on an otherwise
-# idle box: ./tools/round_battery.sh r11
+# idle box: ./tools/round_battery.sh
+# Each run overwrites the same files (GATECHECK.log,
+# GATECHECK_<axis>.log, PYTEST.log); git history keeps older runs.
 #
 # Axes (all via tools/gate_check.py, a vanilla SparkSession):
 #   1. UTC sf0.01 full registry (the driver's own gate semantics)
@@ -27,8 +29,8 @@
 #      literal excluded the 26 midnight-valued boundary rows; fixed
 #      with utc_ts_lit)
 set -u
-R="${1:?usage: round_battery.sh rNN}"
 cd "$(dirname "$0")/.."
+TD=/root/testdata
 
 # oracles that are deliberately quadratic / exhaustive -> excluded at sf0.1
 SF01_EXCLUDE="corpus_curation_pipeline corpus_curation_pipeline_learned \
@@ -51,31 +53,31 @@ run() { # run <logfile> <args...>
   tail -2 "$log"
 }
 
-run "GATECHECK_${R}.log"        /root/testdata/sf0.01
-run "GATECHECK_tz_${R}.log"     --tz=America/New_York /root/testdata/sf0.01
-run "GATECHECK_tzhalf_${R}.log" --tz=Asia/Kolkata /root/testdata/sf0.01
+run "GATECHECK.log"        "$TD/sf0.01"
+run "GATECHECK_tz.log"     --tz=America/New_York "$TD/sf0.01"
+run "GATECHECK_tzhalf.log" --tz=Asia/Kolkata "$TD/sf0.01"
 # shellcheck disable=SC2086
-run "GATECHECK_sf01_${R}.log"   /root/testdata/sf0.1 $SF01_ONLY
-run "GATECHECK_sf0001_${R}.log" /root/testdata/sf0.001
-run "GATECHECK_noaqe_${R}.log"  --conf=spark.sql.adaptive.enabled=false \
-    --conf=spark.sql.codegen.wholeStage=false /root/testdata/sf0.01
-run "GATECHECK_ansi_${R}.log"   --conf=spark.sql.ansi.enabled=false \
-    /root/testdata/sf0.01
-run "GATECHECK_p1_${R}.log"     --conf=spark.sql.shuffle.partitions=1 \
-    /root/testdata/sf0.01
-run "GATECHECK_arrow7_${R}.log" \
+run "GATECHECK_sf01.log"   "$TD/sf0.1" $SF01_ONLY
+run "GATECHECK_sf0001.log" "$TD/sf0.001"
+run "GATECHECK_noaqe.log"  --conf=spark.sql.adaptive.enabled=false \
+    --conf=spark.sql.codegen.wholeStage=false "$TD/sf0.01"
+run "GATECHECK_ansi.log"   --conf=spark.sql.ansi.enabled=false \
+    "$TD/sf0.01"
+run "GATECHECK_p1.log"     --conf=spark.sql.shuffle.partitions=1 \
+    "$TD/sf0.01"
+run "GATECHECK_arrow7.log" \
     --conf=spark.sql.execution.arrow.maxRecordsPerBatch=7 \
-    /root/testdata/sf0.01
+    "$TD/sf0.01"
 
 # ABSOLUTE path: Spark streaming sources resolve relative paths against
 # the Hadoop FS working dir, not the process cwd — a relative sf_dir
 # fails all 8 streaming entries with UNABLE_TO_INFER_SCHEMA
-echo "=== GATECHECK_shuffled_${R}.log: row-order invariance"
+echo "=== GATECHECK_shuffled.log: row-order invariance"
 SHUF_DIR="$PWD/.scratch/sf0.01_shuffled"
-python tools/make_shuffled_sf.py /root/testdata/sf0.01 "$SHUF_DIR"
-run "GATECHECK_shuffled_${R}.log" "$SHUF_DIR" --no-perf-gate
+python tools/make_shuffled_sf.py "$TD/sf0.01" "$SHUF_DIR"
+run "GATECHECK_shuffled.log" "$SHUF_DIR" --no-perf-gate
 
-echo "=== PYTEST_${R}.log: full suite"
-python -m pytest tests/ -q >"PYTEST_${R}.log" 2>&1
-echo "exit=$?" >>"PYTEST_${R}.log"
-tail -3 "PYTEST_${R}.log"
+echo "=== PYTEST.log: full suite"
+python -m pytest tests/ -q >"PYTEST.log" 2>&1
+echo "exit=$?" >>"PYTEST.log"
+tail -3 "PYTEST.log"

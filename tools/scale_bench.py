@@ -23,7 +23,7 @@ Sections (all timings = full execution via noop write, seconds):
   sessionizer), reporting the state store's own row/memory counters.
 
 Usage: python tools/scale_bench.py [out_json]
-Writes one JSON document (default BENCH_scale_r06.json).
+Writes one JSON document (default BENCH_scale.json).
 """
 
 from __future__ import annotations
@@ -1372,7 +1372,7 @@ def main() -> None:
     an existing out_json (so late-round additions don't force a full
     re-run of every face-off); with none, runs everything fresh."""
     args = sys.argv[1:]
-    out_path = args[0] if args else "BENCH_scale_r06.json"
+    out_path = args[0] if args else "BENCH_scale.json"
     if out_path in SECTIONS:
         # `scale_bench.py pagerank` would otherwise write the whole
         # suite to a file literally named "pagerank" — the out_json
